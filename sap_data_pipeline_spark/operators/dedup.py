@@ -23,7 +23,8 @@ from pyspark.sql.window import Window
 
 from sap_data_pipeline_spark.functions import text as X
 from sap_data_pipeline_spark.functions import vectors as V
-from sap_data_pipeline_spark.functions.sizing import right_size, shuffle_partitions
+from sap_data_pipeline_spark.functions.sizing import right_size
+from sap_data_pipeline_spark.operators.fixpoint import Fixpoint
 from sap_data_pipeline_spark.utils import temp_view_name
 
 NUM_PERM = 8  # minhash permutations
@@ -710,73 +711,51 @@ def connected_components(ids: DataFrame, pairs: DataFrame, *,
     as their own cluster after the fixpoint).  Each round is then one
     shuffle-join of the (bounded) edge list against the label frame, a
     min-aggregate on the same id key, and one label self-join for the
-    jump.  Label frames are
-    checkpointed every round — iterative self-referencing plans
-    otherwise grow lineage exponentially and re-execute round 1 under
-    round N.  ``checkpoint_dir=None`` (default) uses
-    ``localCheckpoint``: correct in local mode, but executor loss
-    invalidates the blocks and kills the job.  On a real cluster pass a
-    reliable ``checkpoint_dir`` (HDFS/S3 path) and the rounds survive
-    executor loss via ``df.checkpoint()``.  Convergence = a round that
+    jump.  Label frames are checkpointed every round (``checkpoint_dir``:
+    see :mod:`operators.fixpoint`).  Convergence = a round that
     changes zero labels: the previous label rides through the round's
     aggregate as a carried column, so the changed-count is ONE scalar
     aggregate per round — no frame-diff join, and no dependence on the
     id type being summable (a decimal SUM over labels would crash on
     string ids under ANSI mode, or silently mis-converge with ANSI off).
     """
-    if checkpoint_dir is not None:
-        ids.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # ``lazy`` defers materialization to the caller's next action on
-        # the frame (the plan is still truncated to a LogicalRDD
-        # immediately, so self-join disambiguation is unaffected) —
-        # local mode only: a lazy RELIABLE checkpoint recomputes the
-        # frame once for the action and again for the checkpoint write,
-        # so cluster mode keeps eager semantics.
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=not lazy)
-
-    lbl_type = ids.schema[id_col].dataType
-    edges = ckpt(
-        pairs.select(F.col("id_a").alias("dst"), F.col("id_b").alias("id"))
-        .unionAll(pairs.select(F.col("id_b").alias("dst"), F.col("id_a").alias("id"))),
-        lazy=True,  # right_size's count is the materializing action
-    )  # computed once, re-joined every round
-    # Every loop frame is bounded by the (now measured) edge list, and
-    # the per-round work is light (hash/compare over narrow rows), so
-    # size the rounds' tasks from the data, not the core count
-    # (functions.sizing docstring; guide §2.2).  The loop below runs
-    # under a shuffle-partition pin derived from the same measurement.
-    edges, eparts = right_size(edges)
-    # ONLY nodes that appear in an edge enter the iterative loop: on a
-    # real corpus near-dup components cover a small fraction of
-    # documents, and singletons riding O(log d) shuffle rounds would
-    # dominate the cost for no effect (their label never changes).
-    # They rejoin as their own cluster after the fixpoint.
-    touched = edges.select("id").distinct()
-    singletons = (
-        ids.select(F.col(id_col).alias("id"))
-        .join(touched, "id", "left_anti")
-        .select(F.col("id"), F.col("id").alias("lbl"))
-    )
-    labels: DataFrame | None = None  # round 0 needs no label frame (see below)
-    converged = False
-    # Each round is TWO parsed spark.sql statements over temp views of
-    # the (checkpointed) round frames instead of ~10 DataFrame ops /
-    # ~25 Column builders — the py4j/analysis chatter cost ~0.25 s per
-    # operator invocation on top of the two per-round jobs (guide §4;
-    # r14 isolated A/B on the ahash pair graph: 1.47-1.52 → 1.18-1.44 s
-    # min).  The SQL text parses to the identical Catalyst plans
-    # (exceptAll + oracle verified).
     spark = ids.sparkSession
-    tsql = lbl_type.simpleString()
-    ev = temp_view_name("cc_e")
-    lv = temp_view_name("cc_l")
-    sv = temp_view_name("cc_s")
-    try:
-        with shuffle_partitions(spark, eparts):
+    lbl_type = ids.schema[id_col].dataType
+    with Fixpoint(spark, checkpoint_dir) as fx:
+        edges = fx.ckpt(
+            pairs.select(F.col("id_a").alias("dst"), F.col("id_b").alias("id"))
+            .unionAll(pairs.select(F.col("id_b").alias("dst"), F.col("id_a").alias("id"))),
+            lazy=True,  # right_size's count is the materializing action
+        )  # computed once, re-joined every round
+        # Every loop frame is bounded by the (now measured) edge list, and
+        # the per-round work is light (hash/compare over narrow rows), so
+        # size the rounds' tasks from the data, not the core count
+        # (functions.sizing docstring; guide §2.2).  The loop below runs
+        # under a shuffle-partition pin derived from the same measurement.
+        edges, eparts = right_size(edges)
+        # ONLY nodes that appear in an edge enter the iterative loop: on a
+        # real corpus near-dup components cover a small fraction of
+        # documents, and singletons riding O(log d) shuffle rounds would
+        # dominate the cost for no effect (their label never changes).
+        # They rejoin as their own cluster after the fixpoint.
+        touched = edges.select("id").distinct()
+        singletons = (
+            ids.select(F.col(id_col).alias("id"))
+            .join(touched, "id", "left_anti")
+            .select(F.col("id"), F.col("id").alias("lbl"))
+        )
+        labels: DataFrame | None = None  # round 0 needs no label frame (see below)
+        converged = False
+        # Each round is TWO parsed spark.sql statements over temp views of
+        # the (checkpointed) round frames instead of ~10 DataFrame ops /
+        # ~25 Column builders — the py4j/analysis chatter cost ~0.25 s per
+        # operator invocation on top of the two per-round jobs (guide §4;
+        # r14 isolated A/B on the ahash pair graph: 1.47-1.52 → 1.18-1.44 s
+        # min).  The SQL text parses to the identical Catalyst plans
+        # (exceptAll + oracle verified).
+        tsql = lbl_type.simpleString()
+        ev, lv, sv = fx.view("cc_e"), fx.view("cc_l"), fx.view("cc_s")
+        with fx.pinned(eparts):
             edges.createOrReplaceTempView(ev)
             for _ in range(max_iter):
                 # "own" rows carry the node's current label; propagated
@@ -815,7 +794,7 @@ def connected_components(ids: DataFrame, pairs: DataFrame, *,
                 # job; the jump join afterwards reads the already-cached
                 # blocks from its two sides (no concurrent-consumer race:
                 # the agg ran first).
-                stepped = ckpt(spark.sql(
+                stepped = fx.ckpt(spark.sql(
                     f"SELECT id, min(lbl) AS lbl, max(own) AS prev"
                     f" FROM ({inner}) GROUP BY id"
                 ), lazy=True)
@@ -840,36 +819,31 @@ def connected_components(ids: DataFrame, pairs: DataFrame, *,
                 # pointer jump: follow lbl -> lbl's OWN label (labels are
                 # node ids, so every lbl resolves; coalesce guards the
                 # contract)
-                labels = ckpt(spark.sql(
+                labels = fx.ckpt(spark.sql(
                     f"SELECT s.id, least(s.lbl, coalesce(j._jlbl, s.lbl))"
                     f" AS lbl FROM {sv} s LEFT JOIN"
                     f" (SELECT id AS _jid, lbl AS _jlbl FROM {sv}) j"
                     f" ON s.lbl = j._jid"
                 ))
-    finally:
-        for v in (ev, lv, sv):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "pathological graph; raise max_iter or pre-collapse with exact dedup"
+        if not converged:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds — "
+                "pathological graph; raise max_iter or pre-collapse with exact dedup"
+            )
+        # materialize the result: every downstream consumer of the
+        # labeling (cluster sizes + the size join, the audit aggregates)
+        # reads it at least twice, and the singleton anti-join would
+        # otherwise re-run per consumer.  Built OUTSIDE the shuffle-
+        # partition pin: the singleton anti-join and the union scan the
+        # full ids frame, which at real scale is orders of magnitude
+        # larger than the edge set — running that stage at an
+        # edge-derived task width is exactly the under-parallelization
+        # the pin elsewhere avoids (r13 advice).
+        return fx.ckpt(
+            labels.unionAll(singletons).select(
+                F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
+            )
         )
-    # materialize the result: every downstream consumer of the labeling
-    # (cluster sizes + the size join, the audit aggregates) reads it at
-    # least twice, and the singleton anti-join would otherwise re-run per
-    # consumer.  Built OUTSIDE the shuffle-partition pin: the singleton
-    # anti-join and the union scan the full ids frame, which at real
-    # scale is orders of magnitude larger than the edge set — running
-    # that stage at an edge-derived task width is exactly the
-    # under-parallelization the pin elsewhere avoids (r13 advice).
-    return ckpt(
-        labels.unionAll(singletons).select(
-            F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
-        )
-    )
 
 
 def near_dup_clusters(df: DataFrame, text_col: str = "text",

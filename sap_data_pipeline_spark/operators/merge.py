@@ -31,7 +31,7 @@ import os
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sap_data_pipeline_spark.operators.relational import dedup_keep_last
@@ -63,6 +63,38 @@ def merge_upsert_frames(
     )
     keep = t.join(s, cond, "left_anti")
     return keep.unionByName(source)
+
+
+def _observed_rows(obs: Observation) -> int:
+    """An Observation's ``rows``.  AQE prunes an observed branch that
+    turns out empty, leaving no metrics (``obs.get`` then fails): 0 rows."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
+def _partition_predicate(cols: Sequence[str], values: Sequence[Sequence]) -> Column:
+    """Rows whose partition columns equal one of ``values`` (null-safe).
+
+    One column: ``isin`` over the non-null values, OR ``isNull()`` when a
+    null is present.  Several columns: the per-partition conjunctions
+    combine as a balanced OR tree.  A left-deep OR chain is as deep as the
+    partition count and overflows the JVM stack while converting the
+    Column (a few hundred ``Date`` partitions — a backfill — is enough).
+    """
+    if len(cols) == 1:
+        col = F.col(cols[0])
+        present = [v[0] for v in values if v[0] is not None]
+        terms = [col.isin(present)] if present else []
+        if len(present) < len(values):
+            terms.append(col.isNull())
+    else:
+        terms = [
+            reduce(Column.__and__, [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, vals)])
+            for vals in values
+        ]
+    while len(terms) > 1:
+        terms = [reduce(Column.__or__, terms[i:i + 2]) for i in range(0, len(terms), 2)]
+    return terms[0]
 
 
 class ParquetMergeTable:
@@ -143,24 +175,13 @@ class ParquetMergeTable:
                          "empty_source": True}
                 self.history.append(audit)
                 return audit
-            pred = reduce(
-                Column.__or__,
-                [
-                    reduce(
-                        Column.__and__,
-                        [F.col(c).eqNullSafe(F.lit(r[c])) for c in self.partition_by],
-                    )
-                    for r in pvals
-                ],
-            )
+            pred = _partition_predicate(self.partition_by, pvals)
 
             def _write_pruned() -> tuple[int, int]:
                 # Fresh Observations per attempt: an Observation is
                 # single-use, and a retried write must re-register its
                 # metrics.  rows_after is derived from write-side metrics
                 # (before - affected + merged) — no post-write re-read.
-                from pyspark.sql import Observation
-
                 obs_affected, obs_merged = Observation(), Observation()
                 affected = target.filter(pred).observe(  # pruned at the scan
                     obs_affected, F.count(F.lit(1)).alias("rows")
@@ -174,7 +195,7 @@ class ParquetMergeTable:
                     .partitionBy(*self.partition_by)
                     .parquet(self.path)
                 )
-                return int(obs_affected.get["rows"]), int(obs_merged.get["rows"])
+                return _observed_rows(obs_affected), _observed_rows(obs_merged)
 
             # Dynamic partition overwrite replaces exactly the partitions
             # present in `merged`.  Tradeoff vs the unpartitioned rename
@@ -222,8 +243,6 @@ class ParquetMergeTable:
         idempotent: re-deleting the same keys matches nothing and
         no-ops.
         """
-        from pyspark.sql import Observation
-
         from sap_data_pipeline_spark.utils import retry_call
 
         target = self.read()
@@ -243,19 +262,7 @@ class ParquetMergeTable:
                          "empty_match": True}
                 self.history.append(audit)
                 return audit
-            pred = reduce(
-                Column.__or__,
-                [
-                    reduce(
-                        Column.__and__,
-                        [
-                            F.col(c).eqNullSafe(F.lit(v))
-                            for c, v in zip(self.partition_by, vals)
-                        ],
-                    )
-                    for vals in touched
-                ],
-            )
+            pred = _partition_predicate(self.partition_by, touched)
 
             # partitions that keep at least one row — resolved BEFORE the
             # overwrite (afterwards the emptied ones are indistinguishable
@@ -284,7 +291,7 @@ class ParquetMergeTable:
                     .partitionBy(*self.partition_by)
                     .parquet(self.path)
                 )
-                return int(obs_affected.get["rows"]), int(obs_kept.get["rows"])
+                return _observed_rows(obs_affected), _observed_rows(obs_kept)
 
             n_affected, n_kept = retry_call(
                 _write_pruned, attempts=self.retries, delay_s=self.retry_delay_s
@@ -399,21 +406,8 @@ class ParquetMergeTable:
         )
         dropped = sorted(set(tdig) - set(sdig))
         if changed:
-            pred = reduce(
-                Column.__or__,
-                [
-                    reduce(
-                        Column.__and__,
-                        [
-                            F.col(c).eqNullSafe(F.lit(v))
-                            for c, v in zip(self.partition_by, p)
-                        ],
-                    )
-                    for p in changed
-                ],
-            )
             (
-                source.filter(pred)
+                source.filter(_partition_predicate(self.partition_by, changed))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(*self.partition_by)

@@ -20,6 +20,18 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_mem() -> str:
+    """About half of physical memory, capped at 32g (32g without
+    /proc/meminfo): local[N] runs every executor thread in the driver
+    JVM, and a heap near the host's size gets the JVM OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(f.readline().split()[1])  # MemTotal
+    except OSError:
+        return "32g"
+    return f"{min(32 << 10, max(1 << 10, kb // 2048))}m"
+
+
 def get_spark(app_name: str = "sap-data-pipeline-spark", *, cpus: str | int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or get) a SparkSession with scale-honest defaults.
@@ -63,7 +75,8 @@ def get_spark(app_name: str = "sap-data-pipeline-spark", *, cpus: str | int | No
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local[N] runs all executor threads inside the driver JVM — size
         # the heap for N concurrent tasks, not for a thin coordinator.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -9,6 +9,7 @@
 
 from __future__ import annotations
 
+import itertools
 import logging
 import time
 from collections.abc import Callable
@@ -53,12 +54,12 @@ def retry_call(
 # each round is ONE parsed spark.sql round-trip instead of dozens of
 # py4j Column/DataFrame calls (guide §4; measured ~0.15-0.3 s per
 # operator invocation, r14).  Unique names keep interleaved invocations
-# in one session (tests, streaming batches) from clobbering each other.
-_VIEW_SEQ = 0
+# in one session (tests, streaming batches) from clobbering each other;
+# ``next`` on an ``itertools.count`` is atomic in CPython, so two threads
+# never mint the same name.
+_VIEW_SEQ = itertools.count(1)
 
 
 def temp_view_name(prefix: str) -> str:
     """A process-unique temp-view name ``_{prefix}{n}``."""
-    global _VIEW_SEQ
-    _VIEW_SEQ += 1
-    return f"_{prefix}{_VIEW_SEQ}"
+    return f"_{prefix}{next(_VIEW_SEQ)}"

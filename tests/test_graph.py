@@ -105,17 +105,20 @@ def test_returned_frame_survives_internal_unpersist(spark, tmp_path, use_dir):
         assert second[v] == pytest.approx(want[v], abs=1e-12)
 
 
-def test_tree_root_depth_forest_and_roots(spark):
+@pytest.mark.parametrize("use_dir", [False, True])
+def test_tree_root_depth_forest_and_roots(spark, tmp_path, use_dir):
     """A two-tree forest: every node resolves to ITS root with the
-    right depth; a self-loop counts as a root declaration."""
+    right depth; a self-loop counts as a root declaration.  Pinned under
+    both localCheckpoint and reliable checkpoint modes."""
     from sap_data_pipeline_spark.operators.graph import tree_root_depth
 
     edges = [(1, 0), (2, 0), (3, 1), (4, 3),     # tree rooted at 0
              (11, 10), (12, 11),                  # tree rooted at 10
              (20, 20)]                            # isolated root self-loop
     df = spark.createDataFrame(edges, "child long, parent long")
+    kw = {"checkpoint_dir": str(tmp_path / "ck")} if use_dir else {}
     got = {r["node"]: (r["root"], r["depth"])
-           for r in tree_root_depth(df).collect()}
+           for r in tree_root_depth(df, **kw).collect()}
     assert got[0] == (0, 0) and got[4] == (0, 3) and got[3] == (0, 2)
     assert got[10] == (10, 0) and got[12] == (10, 2)
     assert got[20] == (20, 0)
@@ -152,23 +155,26 @@ def test_tree_root_depth_log_rounds(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_label_propagation_two_triangles(spark):
+@pytest.mark.parametrize("use_dir", [False, True])
+def test_label_propagation_two_triangles(spark, tmp_path, use_dir):
     """Hand-traced sync LPA with min-label ties: two triangles joined
     by one bridge settle into their own communities (min labels 0 and
     10 after 4 rounds — the bridge keeps the triangles from merging
-    because in-triangle labels always outvote the single cross edge)."""
+    because in-triangle labels always outvote the single cross edge).
+    Pinned under both localCheckpoint and reliable checkpoint modes."""
     from sap_data_pipeline_spark.operators.graph import label_propagation
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)],
         "src long, dst long",
     )
+    kw = {"checkpoint_dir": str(tmp_path / "ck")} if use_dir else {}
     got = {r["node"]: r["community"]
-           for r in label_propagation(edges, iterations=4).collect()}
+           for r in label_propagation(edges, iterations=4, **kw).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
 
     again = {r["node"]: r["community"]
-             for r in label_propagation(edges, iterations=4).collect()}
+             for r in label_propagation(edges, iterations=4, **kw).collect()}
     assert got == again  # deterministic re-run
 
 

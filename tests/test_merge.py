@@ -283,6 +283,75 @@ def test_delete_keys_partitioned_prunes_and_drops_emptied(spark, tmp_path):
     assert audit2.get("empty_match") and audit2["rows_after"] == 2
 
 
+def test_merge_and_delete_span_450_partitions(spark, tmp_path):
+    """A backfill touching 450 new Date partitions: MERGE and then DELETE
+    of keys across all of them succeed with the right row counts, and the
+    files of untouched partitions keep their mtime.  A left-deep OR chain
+    with one term per partition overflows the JVM stack at this size, and
+    the all-new partitions leave the observed target branch empty."""
+    import datetime as dt
+    import os
+    from pathlib import Path
+
+    path = str(tmp_path / "fact_backfill")
+    t = ParquetMergeTable(
+        spark, path, keys=["Article", "Date"], partition_by=["Date"],
+        retry_delay_s=0.0,
+    )
+    schema = "Article string, Date date, Qty double"
+    t.merge(spark.createDataFrame(
+        [("A", dt.date(2020, 1, d), 1.0) for d in (1, 2, 3)], schema))
+
+    def files_in(p):
+        return {str(f): os.stat(f).st_mtime_ns
+                for f in Path(p).rglob("*.parquet")}
+
+    untouched = files_in(path)
+    assert untouched
+    days = [dt.date(2021, 1, 1) + dt.timedelta(days=i) for i in range(450)]
+    audit = t.merge(spark.createDataFrame(
+        [(a, d, 2.0) for d in days for a in ("A", "B")], schema))
+    assert audit["rows_before"] == 3 and audit["rows_after"] == 903
+    assert t.read().count() == 903
+
+    audit = t.delete_keys(spark.createDataFrame(
+        [("A", d) for d in days], "Article string, Date date"))
+    assert audit["deleted"] == 450 and audit["rows_after"] == 453
+    rows = t.read().groupBy("Article").count().collect()
+    assert {r["Article"]: r["count"] for r in rows} == {"A": 3, "B": 450}
+    # emptying every touched partition: nothing is left to write
+    audit = t.delete_keys(spark.createDataFrame(
+        [("B", d) for d in days], "Article string, Date date"))
+    assert audit["deleted"] == 450 and audit["rows_after"] == 3
+    assert t.read().count() == 3
+
+    after = files_in(path)
+    for f, mtime in untouched.items():
+        assert f in after and after[f] == mtime, f"partition file rewritten: {f}"
+
+
+def test_partition_predicate_null_safe_one_and_many_columns(spark):
+    """The touched-partition filter matches NULL partition values
+    null-safely, for one column (isin + isNull) and for several
+    (balanced OR of conjunctions)."""
+    from sap_data_pipeline_spark.operators.merge import _partition_predicate
+
+    df = spark.createDataFrame(
+        [(1, "x"), (2, "y"), (None, "x"), (3, None), (None, None)],
+        "a int, b string",
+    )
+
+    def hits(cols, values):
+        return {tuple(r) for r in df.filter(_partition_predicate(cols, values))
+                .collect()}
+
+    assert hits(["a"], [(1,), (None,)]) == {(1, "x"), (None, "x"), (None, None)}
+    assert hits(["a"], [(2,)]) == {(2, "y")}
+    assert hits(["a"], [(None,)]) == {(None, "x"), (None, None)}
+    assert hits(["a", "b"], [(1, "x"), (3, None), (None, "x")]) == {
+        (1, "x"), (3, None), (None, "x")}
+
+
 def test_write_zordered_narrows_both_columns(spark, tmp_path):
     """Z-order vs single-axis clustering on (x, y): the z-ordered layout
     must make per-file min/max spans narrow on BOTH columns, while
