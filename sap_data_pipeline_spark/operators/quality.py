@@ -186,21 +186,16 @@ def reference_distribution(df: "DataFrame", features: dict[str, Column], *,
     ``sf_dir``/``table`` locate the corpus files for fingerprinting
     (metadata only, never a scan); a None ``sf_dir`` (in-memory test
     frames) falls back to an in-process build with no persistence —
-    same contract as the ANN/BPE model artifacts.
+    the ``sources.artifacts.serve`` contract.
     """
     from sap_data_pipeline_spark.sources import artifacts as A
 
-    key_params = f"refdist|{sorted(features)}|{params}"
-    fp = A.corpus_fingerprint(sf_dir or "", table, params=key_params)
-    if fp is None:
-        return feature_bucket_counts(df, features)
-    frames = A.load_or_build(
-        df.sparkSession,
-        "reference_distribution",
-        fp,
+    return A.serve(
+        df.sparkSession, "reference_distribution",
         lambda: {"counts": feature_bucket_counts(df, features)},
-    )
-    return frames["counts"]
+        sf_dir=sf_dir, table=table,
+        params=f"refdist|{sorted(features)}|{params}",
+    )["counts"]
 
 
 def host_quality_gate(

@@ -816,6 +816,11 @@ def pca_project(df: DataFrame, model: dict, *, vec_col: str = "embedding",
         " (x, w) -> x * w), 0.0D, (acc, x) -> acc + x))"
     )
     if whiten:
+        if len(model["comp_std"]) != len(model["components"]):
+            raise ValueError(
+                f"PCA model has {len(model['comp_std'])} comp_std entries "
+                f"for {len(model['components'])} components"
+            )
         stds = "array(" + ",".join(
             repr(float(sd) + 1e-12) + "D" for sd in model["comp_std"]
         ) + ")"

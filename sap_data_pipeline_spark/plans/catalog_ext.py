@@ -18,6 +18,7 @@ from sap_data_pipeline_spark.operators import dedup as D
 from sap_data_pipeline_spark.operators import multimodal as MM
 from sap_data_pipeline_spark.operators import similarity as S
 from sap_data_pipeline_spark.plans.catalog import register
+from sap_data_pipeline_spark.sources import artifacts as A
 from sap_data_pipeline_spark.sources.readers import Star
 
 # --- shared SQL fragments (DuckDB) -----------------------------------------
@@ -285,68 +286,36 @@ def embedding_near_dup_pairs_q(star: Star) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared SEMANTIC near-dup index — the embedding twin of
-# _near_dup_index below: the cell-blocked cosine pair graph and its
-# connected-component labeling are corpus artifacts (one sketch+closure
-# per corpus, served by every downstream query), not per-query work.
-# Built once per corpus with the catalog's default params (threshold
-# 0.3, 8 cells, nprobe 2) and shared by embedding_near_dup_cells
-# (pairs) and semantic_dedup_clusters (CC); like _near_dup_index it is
-# served from the durable content-addressed artifact store, so a cold
-# session's first call is a parquet read, not a sketch+closure build.
+# Shared SEMANTIC near-dup index — the embedding twin of _near_dup_index
+# below: the cell-blocked cosine pair graph and its component labeling
+# are a corpus artifact (one sketch+closure per corpus, served to every
+# downstream query), built with the catalog's default params (threshold
+# 0.3, 8 cells, nprobe 2) and shared by embedding_near_dup_cells (pairs)
+# and semantic_dedup_clusters (CC).
 # ---------------------------------------------------------------------------
-
-_sem_index_cache: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_sem_index_builds = 0  # test hook: number of pair-graph + CC builds
 
 _SEM_PARAMS = dict(threshold=0.3, n_cells=8, nprobe=2)
 
 
 def _sem_index(star: Star) -> tuple[DataFrame, DataFrame]:
-    """(cosine pair graph, component labeling) for star.embeddings.
+    """(cosine pair graph, component labeling) for star.embeddings."""
 
-    Three tiers (r8 verdict #2): process cache → the durable
-    content-addressed artifact store (``sources.artifacts``: a COLD
-    session's first family query is a parquet read, not a 13 s
-    sketch+closure build) → a real build, committed to storage for the
-    next session.  Synthetic in-memory stars (no files to fingerprint)
-    build in-process only, pinned via localCheckpoint."""
-    global _sem_index_builds
-    spark = star.embeddings.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        app_id = str(id(spark))
-    key = (app_id, star.sf_dir)
-    if key not in _sem_index_cache:
-        from sap_data_pipeline_spark.sources import artifacts as A
-
-        def build() -> dict[str, DataFrame]:
-            global _sem_index_builds
-            _sem_index_builds += 1
-            pairs = D.embedding_near_dup_pairs_by_cell(
-                star.embeddings, **_SEM_PARAMS
-            ).localCheckpoint(eager=True)
-            cc = D.connected_components(
-                star.embeddings.select("vec_id"),
-                pairs.select("id_a", "id_b"), id_col="vec_id",
-            )
-            return {"pairs": pairs, "cc": cc}
-
-        fp = A.corpus_fingerprint(
-            getattr(star, "sf_dir", "") or "", "embeddings",
-            params=f"sem|{sorted(_SEM_PARAMS.items())}",
+    def build() -> dict[str, DataFrame]:
+        pairs = D.embedding_near_dup_pairs_by_cell(
+            star.embeddings, **_SEM_PARAMS
+        ).localCheckpoint(eager=True)
+        cc = D.connected_components(
+            star.embeddings.select("vec_id"),
+            pairs.select("id_a", "id_b"), id_col="vec_id",
         )
-        if fp is None:
-            built = build()
-            _sem_index_cache[key] = (
-                built["pairs"],
-                built["cc"].localCheckpoint(eager=True),
-            )
-        else:
-            frames = A.load_or_build(spark, "sem_index", fp, build)
-            _sem_index_cache[key] = (frames["pairs"], frames["cc"])
-    return _sem_index_cache[key]
+        return {"pairs": pairs, "cc": cc}
+
+    frames = A.serve(
+        star.embeddings.sparkSession, "sem_index", build,
+        sf_dir=star.sf_dir, table="embeddings",
+        params=f"sem|{sorted(_SEM_PARAMS.items())}",
+    )
+    return frames["pairs"], frames["cc"]
 
 
 @register(
@@ -496,8 +465,8 @@ def ann_lsh_topk(star: Star) -> DataFrame:
 
 # IVF ANN (KMeans coarse quantizer + nprobe cell probing): training is
 # iterative → no SQL twin; rows-only check + recall test vs brute force.
-# The coarse quantizer comes from the shared per-sf_dir model cache
-# (same n_cells/seed as ann_ivfpq_topk) — train-once/serve-many.
+# The coarse quantizer is the shared ivf_model artifact (same
+# n_cells/seed as ann_ivfpq_topk) — train-once/serve-many.
 @register("ann_ivf_topk")
 def ann_ivf_topk(star: Star) -> DataFrame:
     queries = star.embeddings.filter(F.col("vec_id") < 5).select(
@@ -1534,63 +1503,34 @@ def corpus_stats_rollup(star: Star) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Shared near-dup INDEX: the verified MinHash/LSH pair graph and its
-# connected-component labeling are corpus artifacts, not per-query work —
-# a production dedup pipeline materializes them ONCE (a parquet edge/label
-# table) and serves every downstream curation and audit query from the
-# same index.  The catalog mirrors that literally: the index is a
-# DURABLE content-addressed parquet artifact (sources.artifacts, keyed
-# by corpus file listing + sketch params), built by the first query that
-# ever needs it on this machine and served as a plain parquet scan by
-# every later query — including cold sessions (r8 verdict #2).  The
-# process-local cache below only saves the re-read within a session;
-# synthetic in-memory stars (nothing to fingerprint) fall back to a
-# per-session localCheckpoint build.
+# connected-component labeling are a corpus artifact, not per-query work
+# — a production dedup pipeline materializes them ONCE (a parquet
+# edge/label table) and serves every downstream curation and audit
+# query from the same index.
 # ---------------------------------------------------------------------------
 
-_near_dup_index_cache: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_near_dup_index_builds = 0  # test hook: number of sketch+CC builds
+# Alias of the serving memo: the benchmark clears it by this name between
+# its cold and warm near_dup_clusters ops (perfbench/workloads.py).
+_near_dup_index_cache = A.memo
 
 
 def _near_dup_index(star: Star) -> tuple[DataFrame, DataFrame]:
-    """(verified pair graph, component labeling) for star.documents.
+    """(verified pair graph, component labeling) for star.documents."""
 
-    Same three-tier serving as ``_sem_index``: process cache → durable
-    content-addressed artifact (cold sessions read parquet) → build +
-    commit.  Synthetic stars build in-process only."""
-    global _near_dup_index_builds
-    spark = star.documents.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        app_id = str(id(spark))
-    key = (app_id, star.sf_dir)
-    if key not in _near_dup_index_cache:
-        from sap_data_pipeline_spark.sources import artifacts as A
-
-        def build() -> dict[str, DataFrame]:
-            global _near_dup_index_builds
-            _near_dup_index_builds += 1
-            pairs = D.minhash_dedup_pairs(star.documents).localCheckpoint(
-                eager=True
-            )
-            cc = D.connected_components(star.documents.select("doc_id"), pairs)
-            return {"pairs": pairs, "cc": cc}
-
-        fp = A.corpus_fingerprint(
-            getattr(star, "sf_dir", "") or "", "documents",
-            params=f"minhash|perm={D.NUM_PERM}|band={D.BAND_SIZE}"
-                   f"|shingle={D.SHINGLE_N}|cap={D.LSH_MAX_BUCKET}",
+    def build() -> dict[str, DataFrame]:
+        pairs = D.minhash_dedup_pairs(star.documents).localCheckpoint(
+            eager=True
         )
-        if fp is None:
-            built = build()
-            _near_dup_index_cache[key] = (
-                built["pairs"],
-                built["cc"].localCheckpoint(eager=True),
-            )
-        else:
-            frames = A.load_or_build(spark, "near_dup_index", fp, build)
-            _near_dup_index_cache[key] = (frames["pairs"], frames["cc"])
-    return _near_dup_index_cache[key]
+        cc = D.connected_components(star.documents.select("doc_id"), pairs)
+        return {"pairs": pairs, "cc": cc}
+
+    frames = A.serve(
+        star.documents.sparkSession, "near_dup_index", build,
+        sf_dir=star.sf_dir, table="documents",
+        params=f"minhash|perm={D.NUM_PERM}|band={D.BAND_SIZE}"
+               f"|shingle={D.SHINGLE_N}|cap={D.LSH_MAX_BUCKET}",
+    )
+    return frames["pairs"], frames["cc"]
 
 
 # ---------------------------------------------------------------------------
@@ -3519,40 +3459,22 @@ def host_pagerank(star: Star) -> DataFrame:
 #
 # Train-once/serve-many: KMeans models (PQ codebooks, IVF centroids) are
 # corpus artifacts, not query work — a production index trains them once
-# and serves every query batch from the same codebooks.  The catalog
-# mirrors that: models are cached per (sf_dir, params) and shared between
-# ann_pq_topk and ann_ivfpq_topk, so only the encode/ADC/rerank stages
-# run per call.  The cached values are plain Python float lists —
-# session-independent, safe across SparkSession restarts.
+# and serves every query batch from the same codebooks, so only the
+# encode/ADC/rerank stages run per call.  The models are plain Python
+# float lists, shared between ann_pq_topk and ann_ivfpq_topk.
 # ---------------------------------------------------------------------------
 
 _ANN_PQ_PARAMS = dict(dim=64, m=8, nbits=4, seed=7)
 _ANN_IVF_PARAMS = dict(n_cells=8, seed=7)
-_ann_model_cache: dict[tuple, object] = {}
 
 
 def _model_cached(star: Star, kind: str, params: dict, train, *,
                   table: str = "embeddings") -> object:
-    """Train-once model serving, three tiers like the pair-graph index:
-    process cache → durable JSON artifact (a cold session LOADS the
-    codebook/basis/merge table instead of re-running KMeans/the
-    eigensolve/the BPE loop) → train + commit.  Synthetic stars train
-    in-process only."""
-    key = (kind, star.sf_dir, *sorted(params.items()))
-    if key not in _ann_model_cache:
-        from sap_data_pipeline_spark.sources import artifacts as A
-
-        fp = A.corpus_fingerprint(
-            getattr(star, "sf_dir", "") or "", table,
-            params=f"{kind}|{sorted(params.items())}",
-        )
-        if fp is None:
-            _ann_model_cache[key] = train()
-        else:
-            _ann_model_cache[key] = A.load_or_build_json(
-                f"{kind}_model", fp, train
-            )
-    return _ann_model_cache[key]
+    """The ``{kind}_model`` JSON artifact of ``table`` under ``params``."""
+    return A.serve(
+        None, f"{kind}_model", train, sf_dir=star.sf_dir, table=table,
+        params=f"{kind}|{sorted(params.items())}", json=True,
+    )
 
 
 def _pq_codebooks_cached(star: Star) -> list[list[list[float]]]:
@@ -3949,43 +3871,40 @@ def events_prefix_match_enrich(star: Star) -> DataFrame:
     ).filter(F.col("matched_bits").isNotNull())
 
 
-_ivfpq_index_cache: dict[tuple, DataFrame] = {}
-
-
 def _ivfpq_encoded_cached(star: Star) -> DataFrame:
     """Materialized (neighbor_id, pq_code, ivf_cell) serving index for
     star.embeddings — the stored artifact a PQ deployment actually
-    serves from (32× smaller than the float vectors).  Encoded ONCE per
-    (session, sf_dir) with the cached models; session-keyed like the
-    near-dup pair-graph index because a DataFrame cannot outlive its
-    SparkSession."""
-    spark = star.embeddings.sparkSession
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect has no sparkContext
-        app_id = str(id(spark))
-    key = (app_id, star.sf_dir)
-    if key not in _ivfpq_index_cache:
+    serves from (32× smaller than the float vectors).  Keyed by the
+    models it was encoded with, so it can never pair with other
+    codebooks or centroids."""
+    codebooks = _pq_codebooks_cached(star)
+    centroids = _ivf_centroids_cached(star)
+
+    def build() -> dict[str, DataFrame]:
         enc = S._assign_cells(
             S.pq_encode(
                 star.embeddings.select(
                     F.col("vec_id").alias("neighbor_id"), "embedding"
                 ),
-                _pq_codebooks_cached(star),
+                codebooks,
             ),
-            _ivf_centroids_cached(star), vec_col="embedding", nprobe=1,
-        ).select("neighbor_id", "pq_code", "ivf_cell")
-        _ivfpq_index_cache[key] = enc.localCheckpoint(eager=True)
-    return _ivfpq_index_cache[key]
+            centroids, vec_col="embedding", nprobe=1,
+        )
+        return {"encoded": enc.select("neighbor_id", "pq_code", "ivf_cell")}
+
+    return A.serve(
+        star.embeddings.sparkSession, "ivfpq_index", build,
+        sf_dir=star.sf_dir, table="embeddings",
+        params=f"ivfpq|nprobe=1|{codebooks!r}|{centroids!r}",
+    )["encoded"]
 
 
 @register("ann_ivfpq_topk")
 def ann_ivfpq_topk(star: Star) -> DataFrame:
     """IVF cells × PQ codes × cosine rerank — the composed FAISS IVFPQ
-    layout; rows-only (KMeans-trained models, cached per sf_dir and
-    shared with ann_pq_topk; the encoded index frame itself is the
-    second-level cached artifact), recall-gated in tests like its IVF
-    and PQ components."""
+    layout; rows-only (KMeans-trained models shared with ann_pq_topk,
+    plus the encoded index they produce — all three corpus artifacts),
+    recall-gated in tests like its IVF and PQ components."""
     queries = star.embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5329,7 +5248,7 @@ def weighted_sample_by_length(star: Star) -> DataFrame:
 # comes from a distributed eigensolve with no cross-engine twin; the
 # subspace/whitening contracts are differential-tested against numpy in
 # test_dedup_similarity.  Train-once: the basis is a corpus artifact,
-# cached per (sf_dir, params) beside the ANN codebooks.
+# served beside the ANN codebooks.
 # ---------------------------------------------------------------------------
 
 _PCA_PARAMS = dict(dim=64, k=8, seed=7)

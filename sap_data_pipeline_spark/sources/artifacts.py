@@ -6,11 +6,28 @@ near-dup pair graph and its component labeling are **pipeline
 artifacts** — built once per (corpus content, sketch params), stored
 beside the warehouse, and served by every downstream audit/curation
 query (the same economics as the versioned table's manifest: storage is
-the cache, sessions are stateless).  The process-local caches in
-``plans.catalog_ext`` amortize repeat calls *within* a session; this
-store makes the first call of a **cold** session a parquet read instead
-of a full sketch + connected-components build (r8 verdict #2: the
-13.5 s standalone ``semantic_dedup_clusters`` cost becomes a scan).
+the cache, sessions are stateless).  The store makes the first call of
+a **cold** session a parquet read instead of a full sketch +
+connected-components build (r8 verdict #2: the 13.5 s standalone
+``semantic_dedup_clusters`` cost becomes a scan).
+
+Every reader goes through :func:`serve`, the one serving path:
+
+* a process ``memo`` sits in front of the store, keyed by the
+  artifact's store path (root/family/fingerprint) and, for DataFrame
+  frames, the Spark application — so pointing
+  ``SPARK_GRAFT_ARTIFACT_DIR`` at another root is a fresh key, never a
+  scan of the old root's files; clearing ``memo`` simulates a cold
+  session;
+* behind it, frames go through :func:`load_or_build` (parquet) and
+  plain-data models through :func:`load_or_build_json`;
+* when :func:`corpus_fingerprint` is None (no local source files, e.g.
+  in-memory frames or a ``file:``/``hdfs:`` URI) ``serve`` returns
+  ``build()`` as is: no memo, no persistence.
+
+``plans.catalog_ext._near_dup_index_cache`` is an alias of ``memo``
+kept only because the benchmark's ``perfbench/workloads.py`` clears it
+by that name between its cold and warm ``near_dup_clusters`` ops.
 
 Layout and commit protocol::
 
@@ -46,6 +63,9 @@ import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: The process memo in front of the store (see the module docstring).
+memo: dict[tuple, object] = {}
 
 #: Builder-code version, hashed into every fingerprint.  Bump whenever a
 #: build algorithm changes behavior (connected-components tie-breaking,
@@ -173,6 +193,31 @@ def load_or_build_json(family: str, fingerprint: str,
         pass  # racing maintenance; worst case the artifact ages a beat early
     with open(final) as fh:
         return json.load(fh)
+
+
+def serve(spark: SparkSession, family: str, build: Callable[[], object], *,
+          sf_dir: str | None, table: str, params: str,
+          json: bool = False) -> object:
+    """Serve the ``family`` artifact of ``{sf_dir}/{table}`` under
+    ``params``: from the process memo, else from the store, else built
+    and committed.  ``build`` returns ``{name: DataFrame}`` for parquet
+    frames, or plain JSON-able data when ``json`` is set."""
+    fp = corpus_fingerprint(sf_dir or "", table, params=params)
+    if fp is None:
+        return build()
+    path = os.path.join(artifact_root(), family, fp)
+    if json:
+        key: tuple = (path,)
+    else:
+        try:
+            key = (path, spark.sparkContext.applicationId)
+        except AttributeError:  # Spark Connect has no sparkContext
+            key = (path, id(spark))
+    if key not in memo:
+        # module-global lookups at call time: instrumentation patches them
+        memo[key] = (load_or_build_json(family, fp, build) if json
+                     else load_or_build(spark, family, fp, build))
+    return memo[key]
 
 
 def prune(*, keep_seconds: float, now: float | None = None) -> list[str]:

@@ -2,10 +2,17 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from sap_data_pipeline_spark.operators import dedup as D
 from sap_data_pipeline_spark.operators import similarity as S
+from sap_data_pipeline_spark.plans import catalog_ext  # noqa: F401  (registers queries)
+from sap_data_pipeline_spark.plans.catalog import QUERIES
+from sap_data_pipeline_spark.sources import artifacts as A
 
 
 def _docs(spark, texts):
@@ -864,75 +871,82 @@ def test_ann_model_cache_trains_once(spark, tmp_path, monkeypatch):
     PQ codebook fit and one IVF centroid fit happen per (sf_dir, params)
     — a cache re-key regression would multiply KMeans training cost
     silently (r5 verdict #1's 27 s → 8 s win depends on this).  And the
-    models are durable JSON artifacts (r9): a cold session (cleared
-    process cache) LOADS the codebooks, zero retrains."""
-    from sap_data_pipeline_spark.operators import similarity as S
-    from sap_data_pipeline_spark.plans import catalog_ext as CE
-    from sap_data_pipeline_spark.plans.catalog import QUERIES
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "arts"))
-    CE._ann_model_cache.clear()
+    models and the encoded IVFPQ index are durable artifacts: a cold
+    session (cleared memo) LOADS them, zero retrains and zero
+    re-encodes."""
+    arts = tmp_path / "arts"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(arts))
+    encodes = []
+    pq_encode = S.pq_encode
+    monkeypatch.setattr(
+        S, "pq_encode", lambda *a, **k: encodes.append(1) or pq_encode(*a, **k)
+    )
     before = dict(S.train_calls)
     for name in ("ann_pq_topk", "ann_ivfpq_topk", "ann_ivf_topk", "ann_pq_topk"):
         QUERIES[name](spark, "/root/testdata/sf0.001").count()
     assert S.train_calls["pq"] - before["pq"] == 1
     assert S.train_calls["ivf"] - before["ivf"] == 1
-    # cold session: models served from storage, no KMeans re-run
-    CE._ann_model_cache.clear()
+    assert len(os.listdir(arts / "ivfpq_index")) == 1
+    # cold session: models and encoded index served from storage
+    A.memo.clear()
+    n_encodes = len(encodes)
     QUERIES["ann_ivfpq_topk"](spark, "/root/testdata/sf0.001").count()
     assert S.train_calls["pq"] - before["pq"] == 1
     assert S.train_calls["ivf"] - before["ivf"] == 1
+    assert len(encodes) == n_encodes
 
 
-def test_near_dup_index_builds_once(spark, tmp_path, monkeypatch):
-    """The MinHash/LSH pair graph + CC labeling build ONCE per corpus
-    and serve near_dup_clusters, near_dup_cluster_quality, and
-    keep_best_per_cluster — the audit/curation queries must not
-    re-sketch the corpus; and the index is a DURABLE artifact: a cold
-    session (simulated by clearing the process cache) serves from
-    storage with ZERO rebuilds (r8 verdict #2)."""
-    from sap_data_pipeline_spark.plans import catalog_ext as CE
-    from sap_data_pipeline_spark.plans.catalog import QUERIES
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "arts"))
-    CE._near_dup_index_cache.clear()
-    before = CE._near_dup_index_builds
-    for name in ("near_dup_clusters", "near_dup_cluster_quality",
-                 "keep_best_per_cluster", "near_dup_clusters"):
+@pytest.mark.parametrize("family,queries,builder", [
+    ("near_dup_index",
+     ("near_dup_clusters", "near_dup_cluster_quality",
+      "keep_best_per_cluster", "near_dup_clusters"),
+     "minhash_dedup_pairs"),
+    ("sem_index",
+     ("semantic_dedup_clusters", "embedding_near_dup_cells",
+      "semantic_dedup_clusters"),
+     "embedding_near_dup_pairs_by_cell"),
+], ids=["near_dup_index", "sem_index"])
+def test_corpus_index_builds_once(spark, tmp_path, monkeypatch, family,
+                                  queries, builder):
+    """A pair graph + CC labeling builds ONCE per corpus and serves every
+    query of its family — the audit/curation queries must not re-sketch
+    the corpus; and the index is a DURABLE artifact: a cold session
+    (simulated by clearing the memo) serves from storage with ZERO
+    rebuilds (r8 verdict #2); a different sf_dir is a different corpus."""
+    arts = tmp_path / "arts"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(arts))
+    builds = []
+    orig = getattr(D, builder)
+    monkeypatch.setattr(
+        D, builder, lambda *a, **k: builds.append(1) or orig(*a, **k)
+    )
+    for name in queries:
         QUERIES[name](spark, "/root/testdata/sf0.001").count()
-    assert CE._near_dup_index_builds - before == 1
-    # cold session: process cache gone, storage artifact present →
-    # served as a parquet read, never re-sketched
-    CE._near_dup_index_cache.clear()
-    QUERIES["near_dup_clusters"](spark, "/root/testdata/sf0.001").count()
-    assert CE._near_dup_index_builds - before == 1
-    # a different sf_dir is a different corpus: must rebuild, not serve
-    QUERIES["near_dup_clusters"](spark, "/root/testdata/sf0.01").count()
-    assert CE._near_dup_index_builds - before == 2
+    assert len(builds) == 1
+    assert len(os.listdir(arts / family)) == 1
+    A.memo.clear()
+    QUERIES[queries[-1]](spark, "/root/testdata/sf0.001").count()
+    assert len(builds) == 1
+    QUERIES[queries[-1]](spark, "/root/testdata/sf0.01").count()
+    assert len(builds) == 2
 
 
-def test_sem_index_builds_once(spark, tmp_path, monkeypatch):
-    """The embedding twin: the cell-blocked cosine pair graph + CC
-    labeling build ONCE per corpus and serve BOTH
-    embedding_near_dup_cells and semantic_dedup_clusters; a cold
-    session serves from the durable artifact with zero rebuilds."""
-    from sap_data_pipeline_spark.plans import catalog_ext as CE
-    from sap_data_pipeline_spark.plans.catalog import QUERIES
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "arts"))
-    CE._sem_index_cache.clear()
-    before = CE._sem_index_builds
-    for name in ("embedding_near_dup_cells", "semantic_dedup_clusters",
-                 "embedding_near_dup_cells"):
-        QUERIES[name](spark, "/root/testdata/sf0.001").count()
-    assert CE._sem_index_builds - before == 1
-    # cold session: serve from storage, no re-block/re-close
-    CE._sem_index_cache.clear()
-    QUERIES["semantic_dedup_clusters"](spark, "/root/testdata/sf0.001").count()
-    assert CE._sem_index_builds - before == 1
-    # a different sf_dir is a different corpus: must rebuild, not serve
-    QUERIES["semantic_dedup_clusters"](spark, "/root/testdata/sf0.01").count()
-    assert CE._sem_index_builds - before == 2
+def test_serving_follows_artifact_root_switch(spark, tmp_path, monkeypatch):
+    """The serving memo is keyed by the artifact root: after the first
+    root is deleted and SPARK_GRAFT_ARTIFACT_DIR points at a second one,
+    the same session rebuilds into the new root instead of scanning the
+    deleted root's parquet files (or skipping the new store)."""
+    sf = "/root/testdata/sf0.001"
+    names = ("near_dup_clusters", "embedding_pca_whiten")
+    root_a, root_b = tmp_path / "a", tmp_path / "b"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(root_a))
+    first = [QUERIES[n](spark, sf).count() for n in names]
+    shutil.rmtree(root_a)
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(root_b))
+    assert [QUERIES[n](spark, sf).count() for n in names] == first
+    assert len(os.listdir(root_b / "near_dup_index")) == 1
+    [pca] = os.listdir(root_b / "pca_model")
+    assert pca.endswith(".json")
 
 
 # ---------------------------------------------------------------------------
@@ -949,7 +963,6 @@ def test_pca_matches_numpy_and_whitens(spark, star):
     assume."""
     import numpy as np
 
-    from sap_data_pipeline_spark.operators import similarity as S
 
     k = 4
     model = S.pca_train(star.embeddings, dim=64, k=k)
@@ -981,12 +994,19 @@ def test_pca_matches_numpy_and_whitens(spark, star):
     assert np.abs(off).max() < 1e-3
 
 
+def test_pca_whiten_rejects_malformed_model(star):
+    """A model whose comp_std length differs from its component count
+    fails at build time instead of NULL-padding the whitened output."""
+    basis = [[1.0 if i == j else 0.0 for i in range(64)] for j in range(3)]
+    model = {"components": basis, "mean": [0.0] * 64, "comp_std": [1.0, 2.0]}
+    with pytest.raises(ValueError, match="2 comp_std entries for 3 components"):
+        S.pca_project(star.embeddings, model, whiten=True)
+    S.pca_project(star.embeddings, model, whiten=False)  # comp_std unused
+
+
 def test_pca_sign_canonical_and_cache_trains_once(spark, star, tmp_path, monkeypatch):
     """Retrain determinism (canonical signs) and the train-once pin:
     two catalog calls in one session must fit ONE basis."""
-    from sap_data_pipeline_spark.operators import similarity as S
-    from sap_data_pipeline_spark.plans import catalog_ext as CE
-    from sap_data_pipeline_spark.plans.catalog import QUERIES
 
     m1 = S.pca_train(star.embeddings, dim=64, k=3)
     m2 = S.pca_train(star.embeddings, dim=64, k=3)
@@ -994,13 +1014,12 @@ def test_pca_sign_canonical_and_cache_trains_once(spark, star, tmp_path, monkeyp
     assert m1["comp_std"] == m2["comp_std"]
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "arts"))
-    CE._ann_model_cache.clear()
     before = S.train_calls["pca"]
     for _ in range(2):
         QUERIES["embedding_pca_whiten"](spark, "/root/testdata/sf0.001").count()
     assert S.train_calls["pca"] - before == 1
     # cold session: the basis is a durable JSON artifact, no re-solve
-    CE._ann_model_cache.clear()
+    A.memo.clear()
     QUERIES["embedding_pca_whiten"](spark, "/root/testdata/sf0.001").count()
     assert S.train_calls["pca"] - before == 1
 
